@@ -2,11 +2,12 @@
 reference's entry points (`src/mutable.cpp:67-95` process_stream and
 `:189-292` execute_statement): CREATE/DROP DATABASE, USE, CREATE/DROP
 TABLE, CREATE/DROP INDEX (metadata no-ops, SURVEY §2.2), INSERT VALUES,
-IMPORT DSV, SELECT.
+IMPORT DSV, SELECT, UPDATE and DELETE.
 
-UPDATE/DELETE are *not* reachable in the reference either — parsed but
-unimplemented (`src/catalog/DatabaseCommand.cpp:189-196`); our parser
-rejects them at the same surface.
+The reference parses UPDATE/DELETE but leaves them unimplemented
+(`src/catalog/DatabaseCommand.cpp:189-196`). This engine executes both
+as copy-on-write rewrites of the table's DataFrame
+(`_execute_update`/`_execute_delete`).
 """
 
 from __future__ import annotations
@@ -188,7 +189,11 @@ class Engine:
                 for c in stmt.columns
             ]
             schema = T.StructType(fields)
-            df = self.spark.createDataFrame([], schema)
+            # limit(0) makes the empty base provably empty to Catalyst
+            # (OptimizeLimitZero, PropagateEmptyRelation): IMPORT/INSERT
+            # unions drop it, so the table is sized by what was added
+            # instead of an unbounded LogicalRDD estimate.
+            df = self.spark.createDataFrame([], schema).limit(0)
             self.catalog.create_table(stmt.name, df)
             self.schemas[(self.catalog.current, stmt.name)] = schema
             self.char_limits[(self.catalog.current, stmt.name)] = {

@@ -181,6 +181,51 @@ def test_engine_schema_types(spark):
     }
 
 
+def test_imported_tables_keep_their_size_estimate(spark, tmp_path):
+    """CREATE TABLE's empty base must be provably empty to Catalyst, so an
+    IMPORTed table is sized by its data (the reference copies IMPORT into
+    the table's own Store) and small equi-joins plan a static broadcast."""
+    from mutable_spark.plans.hints import conf_scope
+
+    fact = tmp_path / "fact.csv"
+    fact.write_text("".join(f"{i},{i % 7}\n" for i in range(1000)))
+    dim = tmp_path / "dim.csv"
+    dim.write_text("".join(f"{k},name{k}\n" for k in range(7)))
+    more = tmp_path / "more.csv"
+    more.write_text("7,name7\n8,name8\n")
+
+    eng = Engine(spark)
+    eng.execute("CREATE DATABASE sized")
+    eng.execute("USE sized")
+    eng.execute("CREATE TABLE fact (id INT(4), k INT(4))")
+    eng.execute("CREATE TABLE dim (k INT(4), name CHAR(10))")
+
+    # a just-created table is empty and keeps its declared types
+    empty = eng.execute("SELECT * FROM dim")
+    assert empty.count() == 0
+    assert empty.dtypes == [("k", "int"), ("name", "string")]
+
+    eng.execute(f'IMPORT INTO fact DSV "{fact}"')
+    eng.execute(f'IMPORT INTO dim DSV "{dim}"')
+    size = (
+        eng.execute("SELECT * FROM fact")
+        ._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    )
+    assert int(str(size)) < 2**40
+
+    with conf_scope(spark, **{"spark.sql.adaptive.enabled": "false"}):
+        joined = eng.execute("SELECT fact.id, dim.name FROM fact, dim WHERE fact.k = dim.k")
+        plan = joined._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastHashJoin" in plan, plan
+        assert "Scan ExistingRDD" not in plan, plan
+        assert joined.count() == 1000
+
+    # a second IMPORT appends: the rows of both files are served
+    eng.execute(f'IMPORT INTO dim DSV "{more}"')
+    rows = sorted(tuple(r) for r in eng.execute("SELECT k, name FROM dim").collect())
+    assert rows == [(k, f"name{k}") for k in range(9)]
+
+
 # --- nested queries (QueryExpr) ------------------------------------------
 def test_uncorrelated_scalar_subquery(tables):
     rows = run(

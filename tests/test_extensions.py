@@ -8,11 +8,15 @@ from __future__ import annotations
 
 import subprocess
 import sys
+from pathlib import Path
 
 import pytest
 
 from mutable_spark import extensions as E
 from mutable_spark.plans.planner import Cardinalities, JoinPlanner
+
+#: repository root: the subprocess imports `mutable_spark` from here
+_REPO = Path(__file__).resolve().parents[1]
 
 
 def test_register_plan_enumerator_reaches_the_planner():
@@ -69,7 +73,7 @@ def test_register_instruction_dispatches_in_shell():
         capture_output=True,
         text=True,
         timeout=300,
-        cwd="/root/repo",
+        cwd=_REPO,
         # 4-slot subprocess session: the dispatch test runs no query at
         # scale; local[32] only adds startup/task overhead (the
         # test_shell_e2e.py rule)

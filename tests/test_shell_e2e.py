@@ -7,6 +7,7 @@ from __future__ import annotations
 import os
 import subprocess
 import sys
+from pathlib import Path
 
 #: subprocess env: a 4-slot local session — these e2e tests exercise the
 #: CLI/dialect surface on 1-2-row tables, where local[32] only adds task
@@ -14,6 +15,9 @@ import sys
 #: posture is covered by the shared local[32] suite session everywhere
 #: else
 _ENV = {**os.environ, "SPARK_GRAFT_CPUS": "4"}
+
+#: repository root: the subprocesses import `mutable_spark` from here
+_REPO = Path(__file__).resolve().parents[1]
 
 
 def test_shell_stdin_roundtrip():
@@ -32,7 +36,7 @@ def test_shell_stdin_roundtrip():
         capture_output=True,
         text=True,
         timeout=300,
-        cwd="/root/repo",
+        cwd=_REPO,
         env=_ENV,
     )
     assert out.returncode == 0, out.stderr[-2000:]
@@ -61,7 +65,7 @@ def test_plan_rejects_dml_without_side_effect():
         capture_output=True,
         text=True,
         timeout=300,
-        cwd="/root/repo",
+        cwd=_REPO,
         env=_ENV,
     )
     assert out.returncode == 0, out.stderr[-2000:]
@@ -89,7 +93,7 @@ def test_shell_create_index_on_loaded_table():
         capture_output=True,
         text=True,
         timeout=300,
-        cwd="/root/repo",
+        cwd=_REPO,
         env=_ENV,
     )
     assert out.returncode == 0, out.stderr[-2000:]
@@ -119,7 +123,7 @@ def test_shell_output_options():
         capture_output=True,
         text=True,
         timeout=300,
-        cwd="/root/repo",
+        cwd=_REPO,
         env=_ENV,
     )
     assert out.returncode == 0, out.stderr[-2000:]
@@ -135,7 +139,7 @@ def test_shell_output_options():
         capture_output=True,
         text=True,
         timeout=300,
-        cwd="/root/repo",
+        cwd=_REPO,
         env=_ENV,
     )
     assert quiet.returncode == 0, quiet.stderr[-2000:]
@@ -159,7 +163,7 @@ def test_shell_parquet_instruction():
         capture_output=True,
         text=True,
         timeout=300,
-        cwd="/root/repo",
+        cwd=_REPO,
         env=_ENV,
     )
     assert out.returncode == 0, out.stderr[-2000:]
@@ -189,7 +193,7 @@ def test_shell_string_index_range():
         capture_output=True,
         text=True,
         timeout=300,
-        cwd="/root/repo",
+        cwd=_REPO,
         env=_ENV,
     )
     assert out.returncode == 0, out.stderr[-2000:]
